@@ -81,10 +81,19 @@ def _overwrite_batch_partition(
 
 def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     """Filesystem-agnostic existence probe: ask the reader instead of
-    globbing a local ``Path`` (which breaks on any object store)."""
+    globbing a local ``Path`` (which breaks on any object store).
+
+    Only a missing path means "no state yet". Any other analysis error
+    raises: a store directory with no readable data file (deleted
+    files, or corrupt footers skipped under
+    ``spark.sql.files.ignoreCorruptFiles``) fails schema inference, and
+    reading it as empty would silently re-pair every later doc against
+    nothing."""
     try:
         return spark.read.parquet(path)
-    except AnalysisException:
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return None
 
 
@@ -183,12 +192,16 @@ def near_dup_sink(
             new_banded=new_rows.drop("_bhb"),
             collect_verify_ids=True,
         )
-        # 4+5. emit this batch's pairs and its store delta
+        # 4+5. emit this batch's pairs and its store delta. An empty
+        #    delta (every text null) is not written: it would leave a
+        #    store directory with no data file, which the next batch
+        #    must treat as corrupt (see _read_if_exists)
         _overwrite_batch_partition(pairs, pairs_path, batch_id)
-        _overwrite_batch_partition(
-            new_rows, store_path, batch_id,
-            partition_cols=("band", "_bhb", "_batch_id"),
-        )
+        if not new_rows.isEmpty():
+            _overwrite_batch_partition(
+                new_rows, store_path, batch_id,
+                partition_cols=("band", "_bhb", "_batch_id"),
+            )
 
     return process
 

@@ -410,6 +410,106 @@ def test_dup_clusters_long_chain(spark):
     assert len(got) == 31
 
 
+def test_dup_clusters_v_with_two_parents_is_not_a_fixpoint(spark):
+    """Path 0-5-3-2-1: after round 1 the edge set is
+    {(0,5), (0,2), (1,2), (1,3)}. Its u-set {0,1} and v-set {2,3,5} are
+    disjoint, but node 2 has two parents, so it is not a star forest
+    and stopping there would split the path into {0,2,5} and {1,3}."""
+    from ecov003_l2t_stars_spark.operators.dedup import dup_clusters
+
+    pairs = spark.createDataFrame(
+        [(0, 5), (1, 2), (2, 3), (3, 5)], "doc_a long, doc_b long"
+    )
+    got = {r.doc_id: r.cluster_id for r in dup_clusters(pairs).collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 0, 5: 0}
+
+
+def _path_labelings(sizes, stride):
+    """Every distinct labeling of an n-node path for each n in
+    ``sizes``, one component per labeling; component c's labels are
+    offset by ``c * stride`` so components are disjoint but keep their
+    labels' order. Returns (canonical edges, component of each node)."""
+    from itertools import permutations
+
+    seen, edges, comp = set(), [], {}
+    for n in sizes:
+        for perm in permutations(range(n)):
+            key = frozenset(
+                (min(x, y), max(x, y)) for x, y in zip(perm, perm[1:])
+            )
+            if key in seen:  # the reversed path
+                continue
+            c = len(seen)
+            seen.add(key)
+            edges += [(c * stride + u, c * stride + v) for u, v in key]
+            comp.update({c * stride + x: c for x in range(n)})
+    return edges, comp
+
+
+def test_dup_clusters_early_exit_equals_full_convergence(spark,
+                                                         monkeypatch):
+    """Differential test of the early fixpoint exit over all 5- and
+    6-node path labelings (420 components, batched as disjoint
+    components: every round acts on each component independently).
+
+    The batch runs to full convergence with the early exit disabled,
+    recording each round's edges and the nodes the exit test flags. A
+    component the test does not flag after round r is where that
+    component, run alone, would stop: its round-r edges must already be
+    its final star, centered on the component minimum."""
+    from ecov003_l2t_stars_spark.operators import dedup as D
+
+    edges, comp = _path_labelings((5, 6), stride=8)
+    rounds = []
+    real = D._star_forest_violations
+
+    def record_and_continue(E):
+        rounds.append((
+            {(r.u, r.v) for r in E.collect()},
+            {r.node for r in real(E).collect()},
+        ))
+        return E.select(F.col("u").alias("node"))  # never empty
+
+    monkeypatch.setattr(D, "_star_forest_violations", record_and_continue)
+    final_df, _ = D._alternating_star(
+        spark.createDataFrame(edges, "u long, v long"), 50
+    )
+    final = {(r.u, r.v) for r in final_df.collect()}
+    monkeypatch.undo()
+
+    def by_comp(es):
+        out: dict[int, set] = {}
+        for u, v in es:
+            out.setdefault(comp[u], set()).add((u, v))
+        return out
+
+    members: dict[int, list] = {}
+    for x, c in comp.items():
+        members.setdefault(c, []).append(x)
+    root = {c: min(xs) for c, xs in members.items()}
+    final_c = by_comp(final)
+    assert len(final_c) == len(members) == 420
+    for c, es in final_c.items():
+        assert es == {(root[c], x) for x in members[c] if x != root[c]}, c
+    stopped = 0
+    for es, flagged in rounds:
+        flagged_c = {comp[x] for x in flagged}
+        for c, ces in by_comp(es).items():
+            if c not in flagged_c:
+                assert ces == final_c[c], (c, sorted(ces))
+                stopped += 1
+    assert stopped > 0
+
+    # and the production path (early exit on) on the same batch
+    got = {
+        r.doc_id: r.cluster_id
+        for r in D.dup_clusters(
+            spark.createDataFrame(edges, "doc_a long, doc_b long")
+        ).collect()
+    }
+    assert got == {x: root[c] for x, c in comp.items()}
+
+
 def test_dedup_corpus_keeps_canonicals(spark):
     from ecov003_l2t_stars_spark.operators.dedup import dedup_corpus
 

@@ -5,6 +5,7 @@ are idempotent."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -114,3 +115,74 @@ def test_replayed_batch_is_idempotent(spark, docs, tmp_path):
     }
     assert pairs_replay == pairs_once
     assert spark.read.parquet(f"{state_dir}/sig_store").count() == n_store
+
+
+def _corrupt_footers(root):
+    """Overwrite the footer length and magic of every parquet file under
+    ``root`` and drop the local checksum files that would otherwise
+    catch the damage first (object stores keep no such files)."""
+    from pathlib import Path
+
+    for crc in Path(root).rglob(".*.crc"):
+        crc.unlink()
+    files = list(Path(root).rglob("*.parquet"))
+    assert files
+    for f in files:
+        with open(f, "r+b") as fh:
+            fh.seek(-8, 2)
+            fh.write(b"\0" * 8)
+
+
+def test_corrupt_signature_store_raises(spark, docs, tmp_path):
+    """A signature store whose footers are corrupt must fail the next
+    batch, not read as "no store yet" (which would pair the batch
+    against nothing). With ``ignoreCorruptFiles`` the reader skips the
+    bad files and fails schema inference instead of the footer read."""
+    from ecov003_l2t_stars_spark.streaming.dedup_stream import (
+        _read_if_exists,
+        near_dup_sink,
+    )
+
+    state_dir = tmp_path / "state3"
+    store = str(state_dir / "sig_store")
+    sink = near_dup_sink(spark, str(state_dir))
+    sink(docs.where(F.col("doc_id") % 3 != 0), 0)
+    _corrupt_footers(store)
+    with pytest.raises(Exception):
+        _read_if_exists(spark, store)
+    key = "spark.sql.files.ignoreCorruptFiles"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        with pytest.raises(AnalysisException, match="UNABLE_TO_INFER"):
+            _read_if_exists(spark, store)
+        with pytest.raises(AnalysisException, match="UNABLE_TO_INFER"):
+            sink(docs.where(F.col("doc_id") % 3 == 0), 1)
+    finally:
+        spark.conf.set(key, old)
+    assert _read_if_exists(spark, str(tmp_path / "missing")) is None
+
+
+def test_batch_without_signatures_leaves_a_readable_store(spark, docs,
+                                                         tmp_path):
+    """A batch whose texts are all null has no signatures: it must not
+    leave a store directory without data files, which the next batch
+    would have to treat as corrupt."""
+    from ecov003_l2t_stars_spark.operators.dedup import minhash_lsh_dedup
+    from ecov003_l2t_stars_spark.streaming.dedup_stream import (
+        near_dup_sink,
+        read_pairs,
+    )
+
+    state_dir = str(tmp_path / "state4")
+    sink = near_dup_sink(spark, state_dir)
+    nulls = docs.where(F.col("doc_id") % 3 == 0).withColumn(
+        "text", F.lit(None).cast("string")
+    )
+    sink(nulls, 0)
+    rest = docs.where(F.col("doc_id") % 3 != 0)
+    sink(rest, 1)
+    got = {(r.doc_a, r.doc_b, r.jaccard)
+           for r in read_pairs(spark, state_dir).collect()}
+    assert got == {(r.doc_a, r.doc_b, r.jaccard)
+                   for r in minhash_lsh_dedup(rest).collect()}
