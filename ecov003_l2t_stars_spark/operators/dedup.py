@@ -7,9 +7,10 @@ are the scale-path generalizations a 100 TB corpus needs).
 Scale design:
 
 - exact dedup: hash-groupBy, one shuffle.
-- n-gram Jaccard all-pairs: the VERIFICATION path (quadratic, guarded);
-  shingles come from the same Arrow kernel as the scale path, set ops
-  stay JVM-side (``array_intersect``/``array_union``).
+- n-gram Jaccard all-pairs: the VERIFICATION path (quadratic, guarded)
+  and the test-side oracle of the MinHash verify; shingles come from
+  the same ``_shingles`` helper as the MinHash verify, set ops stay
+  JVM-side (``array_intersect``/``array_union``).
 - MinHash+LSH: the SCALE path. The whole signature (shingles +
   token_hash62 + 64 Carter–Wegman mixes + mins) is ONE Arrow kernel, no
   shuffle; the band self-join CARRIES only the PACKED screen bytes of
@@ -17,8 +18,11 @@ Scale design:
   skew-safe because buckets are hash-random, and no join-back against a
   doc-count-sized signature table), the codegen'd byte-agreement screen
   cuts candidates inside the join stage (superset of the exact
-  component screen — see ``_screen_agree``), and only the surviving
-  docs are shingled for exact-Jaccard verification. Recall
+  component screen — see ``_screen_agree``), and the survivors are
+  verified by ONE Arrow kernel over (pair, text_a, text_b) rows that
+  shingles each doc once per batch and intersects each pair's shingle
+  sets once, in Python, spread over ``spark.sql.shuffle.partitions``
+  tasks (no JVM set ops, no shingle arrays across engines). Recall
   for jaccard >= 0.8 at 64/16 banding is 1 - (1-0.8^4)^16 ≈ 0.9998.
 - SimHash: 62-bit signature via per-bit majority of token hashes;
   near-dups = signatures within Hamming distance d (banded by 16-bit
@@ -49,43 +53,37 @@ def char_shingles(text: Column, k: int = 5) -> Column:
     )
 
 
+def _shingles(t: str, k: int) -> dict:
+    """Distinct k-char shingles of ``t`` as a dict used as an ordered set
+    (keys in first-occurrence order, exactly like ``array_distinct``).
+    A text shorter than k is one whole-text shingle (``""`` gives
+    ``{""}``), so every text has at least one. Python slicing == Spark
+    ``substr`` == DuckDB ``substr`` on code points. The one shingling
+    body of :func:`shingle_table` and the MinHash verify kernel."""
+    return dict.fromkeys([t[i:i + k] for i in range(max(len(t) - (k - 1), 1))])
+
+
 def shingle_table(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
-    spread: bool = True,
 ) -> DataFrame:
-    """(_id, _sh array<string>) — distinct k-shingles per doc as ONE
-    Arrow kernel (linear slicing over code points; ``dict.fromkeys``
-    preserves first-occurrence order exactly like ``array_distinct``).
-    Python slicing == Spark ``substr`` == DuckDB ``substr`` on code
-    points, so shingle SETS (all any consumer uses: minhash mins,
-    Jaccard set sizes) are identical to :func:`char_shingles`.
-
-    ``spread=False`` for COMPUTED inputs (joins/aggregates upstream):
-    the partition probe in :func:`_spread` forces AQE to execute the
-    upstream stages at plan-build time — only raw scans should probe.
+    """(_id, _sh array<string>) — distinct k-shingles per doc
+    (:func:`_shingles`) as ONE Arrow kernel, linear slicing over code
+    points. Shingle SETS (all any consumer uses: Jaccard set sizes) are
+    identical to :func:`char_shingles`.
     """
-    sel = docs.select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_t")
+    sel = _spread(
+        docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
     )
-    if spread:
-        sel = _spread(sel)
     id_type = sel.schema["_id"].dataType.simpleString()
 
     def gen(batches):
         for pdf in batches:
-            texts = pdf["_t"]
             out = [
-                None
-                if t is None
-                else list(
-                    dict.fromkeys(
-                        t[i:i + k] for i in range(max(len(t) - (k - 1), 1))
-                    )
-                )
-                for t in texts
+                None if t is None else list(_shingles(t, k))
+                for t in pdf["_t"]
             ]
             yield pd.DataFrame({"_id": pdf["_id"], "_sh": out})
 
@@ -729,6 +727,70 @@ def minhash_lsh_dedup(
     )
 
 
+# most screen-survivor ids the pushdown lookup collects to the driver;
+# above it the lookup falls back to the semi-join (a boilerplate flood
+# can make every doc of a huge cluster a survivor)
+_VERIFY_ID_BOUND = 50_000
+
+
+def _verify_batch(pdf: pd.DataFrame, k: int, threshold: float) -> pd.DataFrame:
+    """Exact-Jaccard verification of one Arrow batch of candidate rows
+    ``(doc_a, doc_b, _ta, _tb)``: the ``(doc_a, doc_b, jaccard)`` rows
+    with ``jaccard >= threshold``.
+
+    Each distinct text is shingled once per batch (:func:`_shingles`);
+    each pair then costs one set intersection, ``x = |A∩B|``, and
+    ``|A∪B| = |A| + |B| - x`` because both sets are distinct. The ratio
+    is Python int true division, which is correctly rounded, so it
+    equals Spark's ``double / double`` of the same two counts and
+    :func:`jaccard_pairs` bit for bit. A row with a null text never
+    qualifies (its Spark twin is a null ``jaccard``)."""
+    sets: dict = {}
+
+    def shingle_set(t):
+        s = sets.get(t)
+        if s is None:
+            s = sets[t] = _shingles(t, k).keys()
+        return s
+
+    keep, jac = [], []
+    for i, (ta, tb) in enumerate(zip(pdf["_ta"], pdf["_tb"])):
+        if ta is None or tb is None:
+            continue
+        sa, sb = shingle_set(ta), shingle_set(tb)
+        x = len(sa & sb)
+        j = x / (len(sa) + len(sb) - x)
+        if j >= threshold:
+            keep.append(i)
+            jac.append(j)
+    return pd.DataFrame({
+        "doc_a": pdf["doc_a"].iloc[keep].to_numpy(),
+        "doc_b": pdf["doc_b"].iloc[keep].to_numpy(),
+        "jaccard": np.array(jac, dtype=np.float64),
+    })
+
+
+def _screened(paired: DataFrame, est_min: int, n_hashes: int) -> DataFrame:
+    """Distinct ``(doc_a, doc_b)`` candidates that pass the packed-byte
+    agreement screen, round-robin spread over
+    ``spark.sql.shuffle.partitions`` partitions and lazily checkpointed.
+
+    distinct() dedups the multi-band duplicates on the post-screen
+    survivor set (a few thousand rows) instead of the full candidate
+    stream. That shuffle is tiny in bytes, so AQE coalesces it into ONE
+    partition, and everything downstream of the checkpoint (the
+    CPU-heavy verify kernel) would run as one task; AQE never coalesces
+    a repartition with an explicit count."""
+    n_part = int(paired.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        paired.where(_screen_agree(n_hashes) >= F.lit(est_min))
+        .select("doc_a", "doc_b")
+        .distinct()
+        .repartition(n_part)
+        .localCheckpoint(eager=False)
+    )
+
+
 def _screen_verify(
     paired: DataFrame,
     docs: DataFrame,
@@ -743,8 +805,8 @@ def _screen_verify(
     """Shared tail of the batch and incremental minhash pipelines:
     packed-byte agreement screen over candidate rows (``doc_a, doc_b``
     plus the ``_a{j}``/``_b{j}`` packed columns from
-    :func:`_packed_screen_cols`), then exact-Jaccard verification that
-    shingles ONLY the screen survivors (looked up in ``docs``).
+    :func:`_packed_screen_cols`), then exact-Jaccard verification of
+    ONLY the screen survivors, whose texts are looked up in ``docs``.
 
     The byte screen admits a superset of the exact component-agreement
     screen (see :func:`_screen_agree`); since survivors are decided by
@@ -752,90 +814,76 @@ def _screen_verify(
     while the screen itself is a compact compiled predicate evaluated
     inside the band join's stage — no Python boundary, no wide rows
     (the r5 Arrow screen moved ~1 KB per candidate, 11.06M candidates
-    at sf1.0)."""
-    # materialized: both exact-verify joins consume it, and the
-    # survivors drive the semi-join below. distinct() here dedups the
-    # multi-band duplicates on the post-screen survivor set (a few
-    # hundred rows) instead of the full candidate stream.
-    screened = (
-        paired.where(_screen_agree(n_hashes) >= F.lit(est_min))
-        .select("doc_a", "doc_b")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    at sf1.0).
 
-    # shingle ONLY docs that survive the screen: char_shingles is the
-    # per-position HOF (O(L²) UTF8String scans per doc) — building the
-    # full-corpus shingle table twice to verify a few hundred pairs
-    # dominated the whole operator (measured 4.8s of a 3.4s... the
-    # verify stage alone exceeded everything else combined at sf0.1).
-    #
-    # Two lookup shapes:
-    # - default (lazy): left-semi against ``docs`` — keeps the operator
-    #   a pure plan builder, but the semi-join SCANS the docs table
-    #   with no pushdown. Fine for one-shot batch runs.
-    # - ``pushdown_ids=True`` (incremental/streaming): collect the
-    #   survivor id set — screen survivors are a few hundred rows by
-    #   construction (metadata-scale; this makes the builder EAGER) —
-    #   and filter ``docs`` with an ``isin`` predicate that reaches the
-    #   parquet scan as ``PushedFilters: In(doc_id, ...)``, so a
-    #   doc-id-clustered corpus prunes files/row-groups instead of
-    #   rescanning the whole table every micro-batch (VERDICT r5 #3:
-    #   the per-increment full docs scan was the one scale hole).
+    Verification is ONE ``mapInPandas`` kernel (:func:`_verify_batch`)
+    over ``(doc_a, doc_b, text_a, text_b)`` rows, as wide as the
+    spread ``screened`` frame (:func:`_screened`). The set ops run in
+    Python on shingle sets built once per text and batch, not JVM-side:
+    JVM ``array_intersect``/``array_union`` need every survivor's
+    shingle array shipped out of an Arrow kernel and back, and Catalyst
+    pushes a ``jaccard >= threshold`` filter on the projected ratio into
+    the join condition, which evaluates both set ops twice per pair. A
+    filter inside the kernel cannot be duplicated.
+
+    Two survivor lookup shapes:
+
+    - default (lazy): left-semi against ``docs`` — keeps the operator a
+      pure plan builder, but the semi-join SCANS the docs table with no
+      pushdown. Fine for one-shot batch runs.
+    - ``pushdown_ids=True`` (incremental/streaming): collect the
+      survivor id set — at most ``_VERIFY_ID_BOUND + 1`` ids, which
+      makes this builder EAGER — and filter ``docs`` with an ``isin``
+      predicate that reaches the parquet scan as ``PushedFilters:
+      In(doc_id, ...)``, so a doc-id-clustered corpus prunes
+      files/row-groups instead of rescanning the whole table every
+      micro-batch. Above the bound it falls back to the semi-join.
+    """
+    screened = _screened(paired, est_min, n_hashes)
+    pair_ids = (
+        screened.select(F.col("doc_a").alias("_id"))
+        .union(screened.select(F.col("doc_b").alias("_id")))
+        .distinct()
+    )
+    id_type = screened.schema["doc_a"].dataType.simpleString()
+    texts = None
     if pushdown_ids:
-        id_rows = (
-            screened.select(F.col("doc_a").alias("_id"))
-            .union(screened.select(F.col("doc_b").alias("_id")))
-            .distinct()
-            .collect()
-        )
-        ids = sorted(r["_id"] for r in id_rows)
-        if not ids:
-            id_type = docs.schema[id_col].dataType.simpleString()
+        # screened is checkpointed: the collect does not recompute the
+        # screen, and its blocks serve the verify joins below
+        id_rows = pair_ids.limit(_VERIFY_ID_BOUND + 1).collect()
+        if not id_rows:
             return docs.sparkSession.createDataFrame(
                 [], f"doc_a {id_type}, doc_b {id_type}, jaccard double"
             )
-        survivors = docs.where(F.col(id_col).isin(ids))
-    else:
-        pair_ids = (
-            screened.select(F.col("doc_a").alias("_id"))
-            .union(screened.select(F.col("doc_b").alias("_id")))
-            .distinct()
-        )
-        survivors = docs.join(
+        if len(id_rows) <= _VERIFY_ID_BOUND:
+            # no checkpoint: a pruned id-predicate scan of the survivors
+            # is cheaper to read twice than a checkpoint job, and the
+            # In() pushdown stays visible in the final plan
+            texts = docs.where(
+                F.col(id_col).isin(sorted(r["_id"] for r in id_rows))
+            )
+    if texts is None:
+        # materialized once: both verify joins consume it, and each
+        # would otherwise re-run the corpus-wide semi-join
+        texts = docs.join(
             pair_ids, F.col(id_col) == pair_ids["_id"], "left_semi"
-        )
-    sh = shingle_table(
-        survivors,
-        id_col,
-        text_col,
-        k,
-        spread=False,  # joined input: the partition probe would force
-        # AQE to run the whole screen pipeline at plan-BUILD time
+        ).select(id_col, text_col).localCheckpoint(eager=False)
+    joined = screened.join(
+        texts.select(F.col(id_col).alias("doc_a"),
+                     F.col(text_col).alias("_ta")),
+        "doc_a",
+    ).join(
+        texts.select(F.col(id_col).alias("doc_b"),
+                     F.col(text_col).alias("_tb")),
+        "doc_b",
     )
-    if not pushdown_ids:
-        # semi-join form: materialize once — both verify joins consume
-        # it and each would otherwise re-run the corpus-wide semi-join.
-        # The pushdown form skips the checkpoint: its input is already
-        # a pruned id-predicate scan of a few hundred docs (recomputing
-        # that twice is cheaper than a checkpoint job, and the In()
-        # pushdown stays visible in the final plan).
-        sh = sh.localCheckpoint(eager=False)
-    joined = (
-        screened.join(
-            sh.withColumnRenamed("_id", "doc_a").withColumnRenamed("_sh", "_sha"),
-            "doc_a",
-        ).join(
-            sh.withColumnRenamed("_id", "doc_b").withColumnRenamed("_sh", "_shb"),
-            "doc_b",
-        )
-    )
-    inter = F.size(F.array_intersect("_sha", "_shb")).cast("double")
-    union = F.size(F.array_union("_sha", "_shb")).cast("double")
-    return (
-        joined.withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+
+    def verify(batches):
+        for pdf in batches:
+            yield _verify_batch(pdf, k, threshold)
+
+    return joined.select("doc_a", "doc_b", "_ta", "_tb").mapInPandas(
+        verify, f"doc_a {id_type}, doc_b {id_type}, jaccard double"
     )
 
 
@@ -913,7 +961,10 @@ def minhash_lsh_increment(
     into the ``docs`` scan as an ``isin`` predicate, so a
     doc-id-clustered corpus prunes at the scan instead of being fully
     re-scanned every increment. Makes this builder EAGER (it runs the
-    band join); the emitted pairs are identical.
+    band join); the emitted pairs are identical. At most
+    ``_VERIFY_ID_BOUND + 1`` ids reach the driver: above the bound (a
+    boilerplate flood can make a whole cluster survive the screen) the
+    lookup falls back to the semi-join.
     """
     if new_banded is None:
         sigs_new = (

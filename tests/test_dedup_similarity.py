@@ -20,14 +20,17 @@ def emb(spark):
 
 def test_lsh_matches_exact_jaccard(spark, docs):
     """MinHash+LSH (scale path) finds the same >=0.8 pairs as the
-    quadratic exact path at 64 hashes / 16 bands."""
+    quadratic exact path at 64 hashes / 16 bands, with bit-identical
+    jaccard values (the verify kernel vs JVM set ops)."""
     from ecov003_l2t_stars_spark.operators.dedup import (
         jaccard_pairs,
         minhash_lsh_dedup,
     )
 
-    exact = {(r.doc_a, r.doc_b) for r in jaccard_pairs(docs).collect()}
-    lsh = {(r.doc_a, r.doc_b) for r in minhash_lsh_dedup(docs).collect()}
+    exact = {(r.doc_a, r.doc_b, r.jaccard)
+             for r in jaccard_pairs(docs).collect()}
+    lsh = {(r.doc_a, r.doc_b, r.jaccard)
+           for r in minhash_lsh_dedup(docs).collect()}
     assert lsh == exact
     assert len(exact) > 0  # the synthetic corpus contains true near-dups
 

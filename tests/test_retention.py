@@ -275,3 +275,45 @@ def test_compact_tier_through_snapshot_format(spark, tmp_path):
     for f in man["files"]:
         per_dir.setdefault(f.split("/", 1)[0], []).append(f)
     assert all(len(v) == 1 for v in per_dir.values())
+
+
+def test_prune_state_noop_leaves_files_untouched(spark, tmp_path):
+    """Nothing stale: prune_state must not rewrite the table (the
+    non-atomic ParquetFormat rewrite is skipped), so every file keeps
+    its size and mtime. With stale rows it removes exactly those rows."""
+    import os
+    from pathlib import Path
+
+    from ecov003_l2t_stars_spark.plans.retention import prune_state
+
+    base = tmp_path / "out"
+    path = base / "rollup_state"
+    t0 = dt.datetime(2025, 1, 1)
+    schema = ("conv_id string, tier string, as_of timestamp, mean double, "
+              "var double, bias_mean double, bias_var double")
+    latest = [
+        (f"c{i}", tier, t0 + dt.timedelta(days=3), float(i), 0.5, 0.0, 0.1)
+        for i in range(6) for tier in ("1h", "1d")
+    ]
+    spark.createDataFrame(latest, schema).repartition(3).write.parquet(
+        str(path))
+
+    def files():
+        return {
+            str(p): (os.stat(p).st_size, os.stat(p).st_mtime_ns)
+            for p in Path(path).rglob("*") if p.is_file()
+        }
+
+    before = files()
+    assert prune_state(spark, str(base)) == 0
+    assert files() == before
+
+    stale = [
+        ("c1", "1h", t0 + dt.timedelta(days=d), -1.0, 0.5, 0.0, 0.1)
+        for d in range(3)
+    ] + [("c4", "1d", t0, -2.0, 0.5, 0.0, 0.1)]
+    spark.createDataFrame(stale, schema).write.mode("append").parquet(
+        str(path))
+    assert prune_state(spark, str(base)) == len(stale)
+    got = sorted(tuple(r) for r in spark.read.parquet(str(path)).collect())
+    assert got == sorted(latest)
