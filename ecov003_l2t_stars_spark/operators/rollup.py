@@ -21,8 +21,11 @@ Scale notes (100 TB / 10^12 turns):
 - Each tier is ONE shuffle: ``groupBy(conv_id, window(ts, tier))`` with all
   statistics (counts, sums, max, exact percentiles) in a single aggregate.
   Partial aggregation (map-side combine) applies to the decomposable stats
-  automatically; ``percentile`` buffers per-group values — bounded by
-  per-conv-per-bucket activity, not table size.
+  automatically; the sorted latency digest buffers per-group values —
+  bounded by per-conv-per-bucket activity, not table size.
+- Coarser tiers cascade from the finer tier's digests
+  (:func:`cascade_with_digest`), so a hot conversation's month is merged
+  from its ~30 pre-sorted daily digests, never regrouped from raw turns.
 - ``tool_counts`` (map column) needs a key-level pre-aggregate; it is an
   optional second shuffle, off the hot path unless requested.
 - No ``collect``; no per-row Python anywhere in this module (everything is
@@ -34,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ecov003_l2t_stars_spark import TIER_SECONDS, TIERS
+from ecov003_l2t_stars_spark import TIER_SECONDS
 
 ROLES = ("user", "assistant", "system", "tool")
 
@@ -83,22 +86,29 @@ def _role_count(role: str) -> Column:
     return F.count(F.when(F.col("role") == role, F.lit(1))).alias(f"n_{role}")
 
 
-def _finish_from_sorted(df: DataFrame) -> DataFrame:
-    """Derive the order-sensitive statistics from the sorted latency array.
+def _finish(agg: DataFrame, tier: str) -> DataFrame:
+    """Shared tail of every tier build: ``bucket_end``, the
+    order-sensitive statistics from the sorted latency digest, ``tier``.
 
     ``latency_sum`` is a LEFT FOLD over the ASCENDING-sorted values — a
-    frozen reduction order (SURVEY §7.2), so the salted two-stage path,
-    the plain path, and the NumPy oracle all produce bit-identical sums
-    regardless of partition layout.
+    frozen reduction order (SURVEY §7.2), so the direct-from-raw rollup,
+    the digest cascade, and the NumPy oracle all produce bit-identical
+    sums regardless of partition layout.
     """
     from ecov003_l2t_stars_spark.functions.percentiles import (
         pct_from_sorted,
         var_from_sorted,
     )
 
+    n = TIER_SECONDS[tier]
     arr = F.col("_lat_sorted")
     return (
-        df.withColumn("latency_p50", pct_from_sorted(arr, 0.5))
+        agg.withColumn(
+            "bucket_end",
+            F.timestamp_seconds(F.unix_seconds("bucket_start") + F.lit(n)),
+        )
+        .withColumn("_lat_sorted", F.col("lat_digest"))
+        .withColumn("latency_p50", pct_from_sorted(arr, 0.5))
         .withColumn("latency_p90", pct_from_sorted(arr, 0.9))
         .withColumn("latency_p99", pct_from_sorted(arr, 0.99))
         .withColumn(
@@ -118,6 +128,7 @@ def _finish_from_sorted(df: DataFrame) -> DataFrame:
         )
         .withColumn("latency_var", var_from_sorted(arr, F.col("_lat_mean")))
         .drop("_lat_sorted", "_lat_mean")
+        .withColumn("tier", F.lit(tier))
     )
 
 
@@ -130,30 +141,10 @@ def rollup_tier(
 
     ``df_lat`` must be the output of :func:`with_latency` (already
     normalized). Returns the FIXTURES.md §2 rollup schema minus the
-    gap-fill / smoothing / payload columns (added by later stages).
+    gap-fill / smoothing / payload columns (added by later stages) —
+    :func:`rollup_tier_with_digest` without its ``lat_digest``.
     """
-    n = TIER_SECONDS[tier]
-    b = bucket_start(F.col("ts"), tier)
-
-    from ecov003_l2t_stars_spark.functions.percentiles import sorted_vals
-
-    aggs = [
-        F.count(F.lit(1)).alias("n_turns"),
-        *[_role_count(r) for r in ROLES],
-        sorted_vals(F.col("latency_s")).alias("_lat_sorted"),
-        F.max("latency_s").alias("latency_max"),
-        F.count("latency_s").alias("n_latency"),
-    ]
-    out = (
-        df_lat.groupBy(F.col("conv_id"), b.alias("bucket_start"))
-        .agg(*aggs)
-        .withColumn(
-            "bucket_end",
-            F.timestamp_seconds(F.unix_seconds("bucket_start") + F.lit(n)),
-        )
-        .transform(_finish_from_sorted)
-        .withColumn("tier", F.lit(tier))
-    )
+    out = rollup_tier_with_digest(df_lat, tier)
     if include_tool_counts:
         out = out.join(
             tool_counts(df_lat, tier), ["conv_id", "bucket_start"], "left"
@@ -167,70 +158,6 @@ def rollup_tier(
     if include_tool_counts:
         cols.append("tool_counts")
     return out.select(*cols)
-
-
-def rollup_tier_salted(
-    df_lat: DataFrame,
-    tier: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Skew-resistant two-stage rollup (BASELINE.json north_rule:
-    "explicit salting of hot conversations").
-
-    Stage 1 groups by (conv_id, bucket, salt) where
-    ``salt = pmod(xxhash64(conv_id, turn_idx), n_salts)`` — a hot
-    conversation's bucket spreads across ``n_salts`` reducers. Stage 2
-    merges the partials: counts/max sum/combine exactly; the latency
-    arrays are flattened and re-sorted so the order-sensitive statistics
-    (percentiles, folded sum) are computed from the identical sorted
-    sequence the unsalted path sees — salting invariance is bit-exact
-    (property-tested), mirroring SURVEY §4.2's "salting must not break
-    per-conv stable ordering: salt only the partial-agg stage".
-
-    The reference has no skew handling (fixed tile sizes, SURVEY §4.2);
-    this is engine-new, required at 10^12-turn scale where 0.1% of convs
-    carry 1000x turns.
-    """
-    n = TIER_SECONDS[tier]
-    b = bucket_start(F.col("ts"), tier)
-    salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_salts))
-
-    partial = (
-        df_lat.groupBy(
-            F.col("conv_id"), b.alias("bucket_start"), salt.alias("_salt")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            *[_role_count(r) for r in ROLES],
-            F.collect_list("latency_s").alias("_lat_part"),
-            F.max("latency_s").alias("latency_max"),
-            F.count("latency_s").alias("n_latency"),
-        )
-    )
-    merged = (
-        partial.groupBy("conv_id", "bucket_start")
-        .agg(
-            F.sum("n_turns").alias("n_turns"),
-            *[F.sum(f"n_{r}").alias(f"n_{r}") for r in ROLES],
-            F.array_sort(F.flatten(F.collect_list("_lat_part"))).alias(
-                "_lat_sorted"
-            ),
-            F.max("latency_max").alias("latency_max"),
-            F.sum("n_latency").alias("n_latency"),
-        )
-        .withColumn(
-            "bucket_end",
-            F.timestamp_seconds(F.unix_seconds("bucket_start") + F.lit(n)),
-        )
-        .transform(_finish_from_sorted)
-        .withColumn("tier", F.lit(tier))
-    )
-    return merged.select(
-        "conv_id", "tier", "bucket_start", "bucket_end", "n_turns",
-        "n_user", "n_assistant", "n_system", "n_tool",
-        "latency_p50", "latency_p90", "latency_p99",
-        "latency_max", "latency_sum", "latency_var", "n_latency",
-    )
 
 
 def tool_counts(df: DataFrame, tier: str) -> DataFrame:
@@ -252,27 +179,7 @@ def tool_counts(df: DataFrame, tier: str) -> DataFrame:
     )
 
 
-def rollup_all_tiers(
-    df: DataFrame, include_tool_counts: bool = False
-) -> dict[str, DataFrame]:
-    """All four tiers from one normalized + latency-annotated lineage.
-
-    Percentiles are NOT decomposable across tiers (SURVEY §7.2), so every
-    tier aggregates the raw latency-annotated turns directly — one shuffle
-    per tier over the same cached lineage. Decomposable stats could cascade
-    from the finer tier (see :mod:`cascade`); recomputing them costs nothing
-    extra here because they ride the percentile shuffle.
-    """
-    lat = with_latency(normalize(df))
-    return {
-        t: rollup_tier(lat, t, include_tool_counts=include_tool_counts)
-        for t in TIERS
-    }
-
-
-def rollup_tier_with_digest(
-    df_lat: DataFrame, tier: str, **kwargs
-) -> DataFrame:
+def rollup_tier_with_digest(df_lat: DataFrame, tier: str) -> DataFrame:
     """Tier rollup that keeps the sorted latency array (``lat_digest``).
 
     The digest makes the tier CASCADABLE for order statistics: merging
@@ -280,31 +187,20 @@ def rollup_tier_with_digest(
     multiset, so :func:`cascade_with_digest` computes exact percentiles
     for coarser tiers without rescanning raw turns — the engine's answer
     to SURVEY §7.2 "percentiles don't compose". Digest size is bounded by
-    per-conv-per-bucket latency count (the same bound the plain rollup's
-    aggregation buffer already carries).
+    per-conv-per-bucket latency count (the same bound the aggregation
+    buffer of any exact percentile already carries).
     """
     from ecov003_l2t_stars_spark.functions.percentiles import sorted_vals
 
-    n = TIER_SECONDS[tier]
     b = bucket_start(F.col("ts"), tier)
-    out = (
-        df_lat.groupBy(F.col("conv_id"), b.alias("bucket_start"))
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            *[_role_count(r) for r in ROLES],
-            sorted_vals(F.col("latency_s")).alias("lat_digest"),
-            F.max("latency_s").alias("latency_max"),
-            F.count("latency_s").alias("n_latency"),
-        )
-        .withColumn(
-            "bucket_end",
-            F.timestamp_seconds(F.unix_seconds("bucket_start") + F.lit(n)),
-        )
-        .withColumn("_lat_sorted", F.col("lat_digest"))
-        .transform(_finish_from_sorted)
-        .withColumn("tier", F.lit(tier))
+    agg = df_lat.groupBy(F.col("conv_id"), b.alias("bucket_start")).agg(
+        F.count(F.lit(1)).alias("n_turns"),
+        *[_role_count(r) for r in ROLES],
+        sorted_vals(F.col("latency_s")).alias("lat_digest"),
+        F.max("latency_s").alias("latency_max"),
+        F.count("latency_s").alias("n_latency"),
     )
-    return out
+    return _finish(agg, tier)
 
 
 def cascade_with_digest(finer: DataFrame, tier: str) -> DataFrame:
@@ -315,66 +211,19 @@ def cascade_with_digest(finer: DataFrame, tier: str) -> DataFrame:
     parent bucket's ascending latency sequence exactly, so every
     order-sensitive statistic matches the direct-from-raw rollup
     bit-for-bit (property-tested). This is the scale path for coarse
-    tiers: the 30d tier reads the 1h tier (~1/50th the rows of raw).
+    tiers, and what bounds hot-conversation skew there: a coarse bucket
+    merges its children's pre-sorted digests instead of regrouping raw
+    turns, and the 30d tier reads the 1d tier (a few dozen rows per
+    conv-month) instead of raw.
     """
     b = bucket_start(F.col("bucket_start"), tier)
-    n = TIER_SECONDS[tier]
-    return (
-        finer.groupBy(F.col("conv_id"), b.alias("bucket_start"))
-        .agg(
-            F.sum("n_turns").alias("n_turns"),
-            *[F.sum(f"n_{r}").alias(f"n_{r}") for r in ROLES],
-            F.array_sort(F.flatten(F.collect_list("lat_digest"))).alias(
-                "lat_digest"
-            ),
-            F.max("latency_max").alias("latency_max"),
-            F.sum("n_latency").alias("n_latency"),
-        )
-        .withColumn(
-            "bucket_end",
-            F.timestamp_seconds(F.unix_seconds("bucket_start") + F.lit(n)),
-        )
-        .withColumn("_lat_sorted", F.col("lat_digest"))
-        .transform(_finish_from_sorted)
-        .withColumn("tier", F.lit(tier))
+    agg = finer.groupBy(F.col("conv_id"), b.alias("bucket_start")).agg(
+        F.sum("n_turns").alias("n_turns"),
+        *[F.sum(f"n_{r}").alias(f"n_{r}") for r in ROLES],
+        F.array_sort(F.flatten(F.collect_list("lat_digest"))).alias(
+            "lat_digest"
+        ),
+        F.max("latency_max").alias("latency_max"),
+        F.sum("n_latency").alias("n_latency"),
     )
-
-
-def cascade_decomposable(finer: DataFrame, tier: str) -> DataFrame:
-    """Re-aggregate the decomposable statistics of a finer tier into
-    ``tier`` without touching raw data — the rollup analog of the
-    reference's fine→coarse average regrid
-    (``calibrate_fine_to_coarse.py:31-33``).
-
-    count/sum/max compose exactly; percentiles are intentionally absent
-    (recomputed from raw in :func:`rollup_tier`). Used for count-style
-    continuous aggregates and by the cascade-consistency property test.
-
-    ``latency_sum`` is re-aggregated through DECIMAL(38,12) so the
-    composition is order-free and bit-reproducible across partition
-    layouts (CLAUDE.md rule 1 — a bare float ``F.sum`` would depend on
-    reduction order). Note it is the decimal-exact sum of the finer
-    tier's frozen-fold sums, which is deterministic but not the same
-    float as a frozen fold over the raw values — use
-    :func:`cascade_with_digest` where digest-exact statistics are
-    required.
-    """
-    b = bucket_start(F.col("bucket_start"), tier)
-    n = TIER_SECONDS[tier]
-    return (
-        finer.groupBy(F.col("conv_id"), b.alias("bucket_start"))
-        .agg(
-            F.sum("n_turns").alias("n_turns"),
-            *[F.sum(f"n_{r}").alias(f"n_{r}") for r in ROLES],
-            F.max("latency_max").alias("latency_max"),
-            F.sum(F.col("latency_sum").cast("decimal(38,12)"))
-            .cast("double")
-            .alias("latency_sum"),
-            F.sum("n_latency").alias("n_latency"),
-        )
-        .withColumn(
-            "bucket_end",
-            F.timestamp_seconds(F.unix_seconds("bucket_start") + F.lit(n)),
-        )
-        .withColumn("tier", F.lit(tier))
-    )
+    return _finish(agg, tier)

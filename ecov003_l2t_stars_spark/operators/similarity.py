@@ -792,19 +792,6 @@ def pq_code_col(df: DataFrame, books: np.ndarray, vec_col: str) -> Column:
     return _enc(F.col(vec_col))
 
 
-def pq_encode(
-    emb: DataFrame,
-    books: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, _code array<smallint>) table form of :func:`pq_code_col`."""
-    return emb.select(
-        F.col(id_col).alias("_id"),
-        pq_code_col(emb, books, vec_col).alias("_code"),
-    )
-
-
 def ivf_pq_topk(
     emb: DataFrame,
     id_col: str = "vec_id",

@@ -17,7 +17,8 @@ FIXTURES.md expressed block-wise so it vectorizes:
     block = [user, assistant]       (p=0.8)
           | [user, tool, assistant] (p=0.2)
 
-Adversarial knobs (exercise salting/AQE per BASELINE.json north_rule):
+Adversarial knobs (exercise the tier digest cascade and AQE per
+BASELINE.json north_rule):
 hot conversations (x1000 turn count for 0.1% of convs — mirrors skewed
 scene windows the reference hand-parallelizes,
 ``process_ECOSTRESS_data_fusion_distributed_bias.jl:351-367``), gappy

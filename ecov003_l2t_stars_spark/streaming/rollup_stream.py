@@ -249,7 +249,7 @@ def streaming_rollup_1m_digest(
     bit-identical to ``rollup_tier_with_digest`` over the same rows
     (asserted in tests), closing the stream/batch percentile latency gap.
     """
-    from ecov003_l2t_stars_spark.operators.rollup import _finish_from_sorted
+    from ecov003_l2t_stars_spark.operators.rollup import _finish
 
     agg = (
         lat_stream.withWatermark("ts", watermark)
@@ -267,6 +267,8 @@ def streaming_rollup_1m_digest(
         .select(
             "conv_id",
             F.col("w.start").alias("bucket_start"),
+            # keeps bucket_end's place in the schema; _finish re-derives
+            # it as bucket_start + 60 s, which is w.end
             F.col("w.end").alias("bucket_end"),
             "n_turns",
             *[f"n_{r}" for r in ROLES],
@@ -274,9 +276,8 @@ def streaming_rollup_1m_digest(
             "latency_max",
             "n_latency",
         )
-        .withColumn("_lat_sorted", F.col("lat_digest"))
     )
-    return _finish_from_sorted(agg).withColumn("tier", F.lit("1m"))
+    return _finish(agg, "1m")
 
 
 STATE_SCHEMA = StructType(

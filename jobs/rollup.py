@@ -33,7 +33,6 @@ def main() -> None:
     p.add_argument("--fill", choices=["locf", "linear"], default="locf")
     p.add_argument("--smooth-tiers", default="1h,1d")
     p.add_argument("--job-id", default="rollup")
-    p.add_argument("--no-salt", action="store_true")
     p.add_argument("--master", default=None)
     # availability gate: only run conv_buckets whose required sources
     # have all arrived per the ingestion manifest (plans/ingest.backlog)
@@ -70,7 +69,6 @@ def main() -> None:
         smooth_tiers=tuple(
             t for t in args.smooth_tiers.split(",") if t
         ),
-        salted=not args.no_salt,
         job_id=args.job_id,
     )
     buckets = None

@@ -9,10 +9,11 @@ cores and poison the ratio) and one BLAS thread per worker (reference
 parity: ``process_ECOSTRESS_data_fusion_distributed_bias.jl:38-40``).
 
 The measured job is the engine's compute pipeline as ONE Spark action —
-normalize → latency → four salted tier rollups → gap-fill → Kalman
-smooth, unioned into a noop sink. Parquet-commit serialization is
-storage-side (parallel on a real object store) and excluded; the
-checkpointed writing job is benchmarked separately by ``bench.py``.
+normalize → latency → the 1m tier rollup cascaded by digest merge to
+1h/1d/30d → gap-fill → Kalman smooth, unioned into a noop sink.
+Parquet-commit serialization is storage-side (parallel on a real object
+store) and excluded; the checkpointed writing job is benchmarked
+separately by ``bench.py``.
 
 Writes BENCH_SCALING.md and prints one JSON line.
 
@@ -34,7 +35,7 @@ import json, os, sys, time
 sys.path.insert(0, {repo!r})
 from ecov003_l2t_stars_spark.session import get_spark
 from ecov003_l2t_stars_spark.operators.rollup import (
-    normalize, with_latency, rollup_tier_salted)
+    cascade_with_digest, normalize, rollup_tier_with_digest, with_latency)
 from ecov003_l2t_stars_spark.operators.gapfill import gap_fill
 from ecov003_l2t_stars_spark.operators.smooth import smooth_tier
 from pyspark.sql import functions as F
@@ -56,7 +57,7 @@ n_turns = raw.count()  # warm the OS page cache identically at both levels
 common = ["conv_id", "tier", "bucket_start", "n_turns",
           "latency_p50", "latency_sum", "n_latency"]
 
-# Mirror the production pipeline (plans/pipeline.py:190): the shared
+# Mirror the production pipeline (plans/pipeline.py): the shared
 # normalized + latency-annotated lineage is persisted ONCE and every
 # tier branch reads the cached partitions, instead of re-running
 # scan -> shuffle -> window-sort per branch. Caching defeats Catalyst
@@ -69,12 +70,19 @@ lat_cached = (
 )
 
 def build(lat):
+    # the production tier chain: 1m from raw, each coarser tier merged
+    # from the previous tier's sorted latency digests
     outs = []
+    tiers = {{}}
+    prev = None
     for tier in ("1m", "1h", "1d", "30d"):
-        outs.append(rollup_tier_salted(lat, tier, n_salts=8).select(*common))
+        prev = (rollup_tier_with_digest(lat, tier) if prev is None
+                else cascade_with_digest(prev, tier))
+        tiers[tier] = prev.drop("lat_digest")
+        outs.append(prev.select(*common))
     sm = smooth_tier(
-        gap_fill(rollup_tier_salted(lat, "1h", n_salts=8), "1h",
-                 value_cols=("latency_p50",), method="locf"),
+        gap_fill(tiers["1h"], "1h", value_cols=("latency_p50",),
+                 method="locf"),
         "1h", n_groups=cores * 4)
     outs.append(sm.select(*[
         F.col(c) if c in sm.columns else F.lit(None).alias(c) for c in common
@@ -193,8 +201,9 @@ def main() -> None:
 
 Per BASELINE.json's north rule ("throughput scaling efficiency >=0.8
 from N to 4N executors"), evidenced by running the identical engine
-compute pipeline (normalize -> stable-order latency -> 4 salted tier
-rollups -> gap-fill -> Kalman smooth, one Spark action into a noop sink)
+compute pipeline (normalize -> stable-order latency -> 1m tier rollup
+cascaded by digest merge to 1h/1d/30d -> gap-fill -> Kalman smooth, one
+Spark action into a noop sink)
 on the same {small['turns']:,}-turn seed-42 transcript table at two
 CPU-pinned parallelism levels (taskset; no real cluster in this
 sandbox). BLAS pinned to 1 thread/worker like the reference

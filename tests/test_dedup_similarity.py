@@ -761,14 +761,16 @@ def test_pq_codes_and_recall(spark, emb):
 
     from ecov003_l2t_stars_spark.operators.similarity import (
         ivf_pq_topk,
-        pq_encode,
+        pq_code_col,
         pq_fit,
     )
 
     books = pq_fit(emb, dim=64, m=8, nbits=4)
     assert books.shape == (8, 16, 8)
     assert np.array_equal(books, pq_fit(emb, dim=64, m=8, nbits=4))
-    codes = pq_encode(emb, books).collect()
+    codes = emb.select(
+        pq_code_col(emb, books, "embedding").alias("_code")
+    ).collect()
     assert all(len(r["_code"]) == 8 for r in codes)
     assert all(0 <= c < 16 for r in codes for c in r["_code"])
 

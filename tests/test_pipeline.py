@@ -6,6 +6,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from ecov003_l2t_stars_spark.operators.rollup import (
+    normalize,
+    rollup_tier,
+    with_latency,
+)
 from ecov003_l2t_stars_spark.plans.pipeline import (
     RollupConfig,
     RollupJob,
@@ -101,3 +106,45 @@ def test_smoothed_tier_written(spark, input_path, tmp_path_factory):
     assert segs.agg(F.sum("n_points")).collect()[0][0] == t.where(
         ~F.col("gap_filled")
     ).count()
+
+
+_EXACT_COLS = (
+    "n_turns", "n_user", "n_assistant", "n_system", "n_tool", "n_latency",
+    "latency_p50", "latency_p90", "latency_p99",
+    "latency_max", "latency_sum", "latency_var",
+)
+
+
+def test_default_job_tiers_match_direct_rollup(spark, tmp_path_factory):
+    """The default job cascades 1h/1d/30d from the 1m digests; every
+    observed row of every tier it writes equals the direct-from-raw
+    ``rollup_tier`` bit-for-bit, including over hot conversations."""
+    spec = GenSpec(n_convs=150, hot_frac=0.02, hot_multiplier=50)
+    inp = tmp_path_factory.mktemp("in_hot") / "transcripts.parquet"
+    write_transcripts_parquet(str(inp), spec)
+    raw = spark.read.parquet(str(inp))
+    turns = raw.groupBy("conv_id").count().agg(F.max("count")).first()[0]
+    assert turns >= 10 * spec.mean_turns  # at least one hot conversation
+
+    out = str(tmp_path_factory.mktemp("out_hot"))
+    cfg = RollupConfig(str(inp), out)
+    RollupJob(spark, cfg).run()
+
+    lat = with_latency(normalize(raw))
+    key = ["conv_id", "bucket_start"]
+    for tier in cfg.tiers:
+        got = read_tier(spark, out, tier)
+        if tier in cfg.smooth_tiers:
+            got = got.where(~F.col("gap_filled"))
+        got = got.select(*key, *_EXACT_COLS).orderBy(*key).toPandas()
+        want = (
+            rollup_tier(lat, tier).select(*key, *_EXACT_COLS)
+            .orderBy(*key).toPandas()
+        )
+        assert len(got) == len(want) > 0, tier
+        for c in key:
+            assert (got[c] == want[c]).all(), (tier, c)
+        for c in _EXACT_COLS:
+            g = got[c].to_numpy(dtype=float)
+            w = want[c].to_numpy(dtype=float)
+            assert np.array_equal(g, w, equal_nan=True), (tier, c)

@@ -14,10 +14,10 @@ import pytest
 
 from ecov003_l2t_stars_spark.functions.percentiles import np_pct, np_var_sorted
 from ecov003_l2t_stars_spark.operators.rollup import (
-    cascade_decomposable,
+    cascade_with_digest,
     normalize,
-    rollup_all_tiers,
     rollup_tier,
+    rollup_tier_with_digest,
     with_latency,
 )
 from ecov003_l2t_stars_spark.sources.transcripts import GenSpec, generate_transcripts
@@ -158,29 +158,6 @@ def test_rollup_matches_pandas_oracle(spark, gen_pair, tier, tier_s):
         assert np.all(both_nan | (e == g)), c  # bit-exact point match
 
 
-def test_salting_invariance(spark, gen_pair):
-    """Salted two-stage agg == plain agg, bit-exact on every column
-    (SURVEY §5.2 property; north_rule skew handling)."""
-    from ecov003_l2t_stars_spark.operators.rollup import rollup_tier_salted
-
-    _, sdf = gen_pair
-    lat = with_latency(normalize(sdf))
-    plain = rollup_tier(lat, "1h").toPandas()
-    salted = rollup_tier_salted(lat, "1h", n_salts=7).toPandas()
-    key = ["conv_id", "bucket_start"]
-    m = plain.merge(salted, on=key, suffixes=("_p", "_s"), how="outer",
-                    indicator=True)
-    assert (m["_merge"] == "both").all()
-    for c in ["n_turns", "n_user", "n_assistant", "n_system", "n_tool",
-              "n_latency"]:
-        assert (m[f"{c}_p"] == m[f"{c}_s"]).all(), c
-    for c in ["latency_p50", "latency_p90", "latency_p99", "latency_max",
-              "latency_sum", "latency_var"]:
-        p = m[f"{c}_p"].to_numpy(dtype=float)
-        s = m[f"{c}_s"].to_numpy(dtype=float)
-        assert np.all((np.isnan(p) & np.isnan(s)) | (p == s)), c
-
-
 def test_latency_sum_is_sorted_fold(spark, gen_pair):
     """latency_sum equals a left fold over ascending-sorted latencies
     (the frozen reduction order)."""
@@ -210,29 +187,10 @@ def test_latency_sum_is_sorted_fold(spark, gen_pair):
     assert np.all((np.isnan(e) & np.isnan(g)) | (e == g))
 
 
-def test_cascade_consistency(spark, gen_pair):
-    """1m→1h cascade of decomposable stats equals direct 1h rollup."""
-    _, sdf = gen_pair
-    lat = with_latency(normalize(sdf))
-    m1 = rollup_tier(lat, "1m")
-    direct = rollup_tier(lat, "1h")
-    casc = cascade_decomposable(m1, "1h")
-    cols = ["conv_id", "bucket_start", "n_turns", "n_user", "n_assistant",
-            "n_system", "n_tool", "latency_max", "n_latency"]
-    d = direct.select(cols)
-    c = casc.select(cols)
-    assert d.exceptAll(c).count() == 0 and c.exceptAll(d).count() == 0
-
-
 def test_digest_cascade_exact_percentiles(spark, gen_pair):
     """Merging finer-tier sorted digests reproduces the direct coarse
     rollup bit-for-bit INCLUDING percentiles/variance — the no-raw-rescan
     cascade (SURVEY §7.2 'percentiles don't compose' answer)."""
-    from ecov003_l2t_stars_spark.operators.rollup import (
-        cascade_with_digest,
-        rollup_tier_with_digest,
-    )
-
     _, sdf = gen_pair
     lat = with_latency(normalize(sdf))
     fine = rollup_tier_with_digest(lat, "1m")
@@ -254,15 +212,19 @@ def test_digest_cascade_exact_percentiles(spark, gen_pair):
 
 
 def test_all_tiers_shapes(spark, gen_pair):
+    """The production tier chain: 1m from raw, then 1h→1d→30d each
+    cascaded from the previous tier's digests."""
+    from pyspark.sql import functions as F
+
     _, sdf = gen_pair
-    tiers = rollup_all_tiers(sdf)
+    tiers = {"1m": rollup_tier_with_digest(with_latency(normalize(sdf)), "1m")}
+    for finer, t in (("1m", "1h"), ("1h", "1d"), ("1d", "30d")):
+        tiers[t] = cascade_with_digest(tiers[finer], t)
     counts = {t: df.count() for t, df in tiers.items()}
     # coarser tiers have fewer-or-equal buckets
     assert counts["1m"] >= counts["1h"] >= counts["1d"] >= counts["30d"]
     total = normalize(sdf).count()
     for t, df in tiers.items():
-        from pyspark.sql import functions as F
-
         assert df.agg(F.sum("n_turns")).collect()[0][0] == total, t
 
 
